@@ -1,8 +1,3 @@
-from .core import blend, clamp, conf_floor, safe_div, score_band  # noqa: F401
-from .text import (  # noqa: F401
-    char_shingles,
-    stopword_ratio,
-    token_count,
-    word_tokens,
-)
+from .core import clamp  # noqa: F401
+from .text import stopword_ratio, token_count, word_tokens  # noqa: F401
 from .vectors import cosine_similarity, dot, l2_norm  # noqa: F401

@@ -1,41 +1,31 @@
-"""Core scalar column helpers (SURVEY.md §2.8 F9–F13).
+"""Core scalar helpers (SURVEY.md §2.8 F9–F13) as SQL fragments.
 
 The reference defines ``clamp`` five separate times
 (app/scoring_engine/vr_model.py:23-24, composite.py:13-14,
 synergy.py:42-43, app/scoring/utils.py:4-5,
 scripts/run_scoring_engine.py:33-34) and ``safe_div`` once
-(app/scoring/utils.py:7-9).  Here each is a single column-expression
-helper: pure JVM-side `Column` math, whole-stage-codegen friendly, no
-Python UDFs.
+(app/scoring/utils.py:7-9).  Here each formula has ONE spelling: a
+string builder that returns a Spark SQL fragment.  Each classic-API
+Column op is a py4j round trip at construction time, so callers
+splice fragments python-side into one `F.expr`/`selectExpr` parse per
+output column.  `!r` on floats emits the shortest round-tripping
+decimal (bit-exact reparse); the D suffix keeps SQL literals DOUBLE
+(bare decimals parse as DECIMAL and would change the expression
+types).
 
-All helpers are ANSI-safe: guarded denominators, no implicit casts
+`clamp` and `round_stable` also keep a Column form for operators
+that still compose Column chains; it takes a Column, never a name.
+
+All fragments are ANSI-safe: guarded denominators, no implicit casts
 that can raise under `spark.sql.ansi.enabled=true`.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def _col(x: Column | str) -> Column:
-    return F.col(x) if isinstance(x, str) else x
-
-
-def clamp(col: Column | str, lo: float, hi: float) -> Column:
-    """clamp(x, lo, hi) — reference app/scoring/utils.py:4-5."""
-    return F.least(F.greatest(_col(col), F.lit(float(lo))), F.lit(float(hi)))
-
-
-# --- single-parse SQL fragment twins (r13, guide §5 driver / §7.3) ---------
-# Each classic-API Column op is a py4j round trip at CONSTRUCTION time,
-# and the scoring DAG builds hundreds of them per invocation; these
-# string builders compose the IDENTICAL arithmetic python-side for ONE
-# F.expr/selectExpr parse.  `!r` on floats emits the shortest
-# round-tripping decimal (bit-exact reparse); the D suffix keeps SQL
-# literals DOUBLE (bare decimals parse as DECIMAL and would change the
-# expression types).  Fragments, not Columns: callers splice them into
-# one top-level parse per output column.
 
 
 def flit(v: float) -> str:
@@ -44,9 +34,7 @@ def flit(v: float) -> str:
     Non-finite floats would render as invalid SQL ('infD'/'nanD') and
     surface as an obscure parse error far from the bad config value
     (these fragments are spliced by many builders) — fail fast here
-    instead (r13 advisor note)."""
-    import math
-
+    instead."""
     v = float(v)
     if not math.isfinite(v):
         raise ValueError(f"flit() requires a finite float, got {v!r}")
@@ -54,19 +42,41 @@ def flit(v: float) -> str:
 
 
 def clamp_sql(x: str, lo: float, hi: float) -> str:
+    """clamp(x, lo, hi) — reference app/scoring/utils.py:4-5."""
     return f"least(greatest({x}, {flit(lo)}), {flit(hi)})"
 
 
+def clamp(col: Column, lo: float, hi: float) -> Column:
+    """Column form of `clamp_sql`."""
+    return F.least(F.greatest(col, F.lit(float(lo))), F.lit(float(hi)))
+
+
 def conf_floor_sql(x: str, floor: float = 0.20) -> str:
+    """Effective confidence max(conf, floor) — reference
+    app/scoring_engine/vr_model.py:58-61."""
     return f"greatest(coalesce({x}, 0.0D), {flit(floor)})"
 
 
-def round_stable_sql(x: str, scale: int) -> str:
-    p = flit(float(10**scale))
-    return f"floor({x} * {p} + 0.5D) / {p}"
+def safe_div_sql(num: str, den: str, default: float = 0.0) -> str:
+    """num/den with a default when den is 0 or NULL — reference
+    app/scoring/utils.py:7-9.  Guarded so ANSI mode never raises."""
+    return (
+        f"CASE WHEN {den} IS NOT NULL AND {den} != 0 "
+        f"THEN {num} / {den} ELSE {flit(default)} END"
+    )
+
+
+def blend_sql(x: str, target: str, weight: float) -> str:
+    """Prior blending `(1-w)*x + w*target` — reference
+    scripts/run_scoring_engine.py:47-49."""
+    w = flit(weight)
+    return f"(1.0D - {w}) * {x} + {w} * {target}"
 
 
 def score_band_sql(x: str) -> str:
+    """Maturity band ladder at <=20/40/60/80 →
+    Nascent/Developing/Progressing/Advanced/Leading — reference
+    app/scoring_engine/composite.py:17-34."""
     return (
         f"CASE WHEN {x} <= 20 THEN 'Nascent' "
         f"WHEN {x} <= 40 THEN 'Developing' "
@@ -76,44 +86,7 @@ def score_band_sql(x: str) -> str:
     )
 
 
-def safe_div(num: Column | str, den: Column | str, default: float = 0.0) -> Column:
-    """num/den with a default when den is 0 or NULL — reference
-    app/scoring/utils.py:7-9.  Guarded so ANSI mode never raises."""
-    den = _col(den)
-    return F.when(den.isNotNull() & (den != 0), _col(num) / den).otherwise(
-        F.lit(float(default))
-    )
-
-
-def blend(col: Column | str, target: Column | str | float, weight: Column | float) -> Column:
-    """Prior blending `(1-w)*x + w*target` — reference
-    scripts/run_scoring_engine.py:47-49."""
-    t = F.lit(float(target)) if isinstance(target, (int, float)) else _col(target)
-    w = F.lit(float(weight)) if isinstance(weight, (int, float)) else weight
-    return (F.lit(1.0) - w) * _col(col) + w * t
-
-
-def conf_floor(col: Column | str, floor: float = 0.20) -> Column:
-    """Effective confidence max(conf, floor) — reference
-    app/scoring_engine/vr_model.py:58-61."""
-    return F.greatest(F.coalesce(_col(col), F.lit(0.0)), F.lit(float(floor)))
-
-
-def score_band(col: Column | str) -> Column:
-    """Maturity band ladder at <=20/40/60/80 →
-    Nascent/Developing/Progressing/Advanced/Leading — reference
-    app/scoring_engine/composite.py:17-34."""
-    c = _col(col)
-    return (
-        F.when(c <= 20, F.lit("Nascent"))
-        .when(c <= 40, F.lit("Developing"))
-        .when(c <= 60, F.lit("Progressing"))
-        .when(c <= 80, F.lit("Advanced"))
-        .otherwise(F.lit("Leading"))
-    )
-
-
-def round_stable(col: Column | str, scale: int) -> Column:
+def round_stable_sql(x: str, scale: int) -> str:
     """Cross-engine-stable fixed-point rounding for SIGNED doubles:
     floor(x·10^s + 0.5)/10^s.
 
@@ -134,6 +107,11 @@ def round_stable(col: Column | str, scale: int) -> Column:
     Using this identical IEEE multiply+add+floor on BOTH sides (the
     oracle SQL spells out the same formula) makes the rounded value
     bit-identical in every engine."""
-    c = F.col(col) if isinstance(col, str) else col
+    p = flit(float(10**scale))
+    return f"floor({x} * {p} + 0.5D) / {p}"
+
+
+def round_stable(col: Column, scale: int) -> Column:
+    """Column form of `round_stable_sql`."""
     p = float(10**scale)
-    return F.floor(c * F.lit(p) + F.lit(0.5)) / F.lit(p)
+    return F.floor(col * F.lit(p) + F.lit(0.5)) / F.lit(p)

@@ -1,7 +1,12 @@
-"""Vector math over `array<float>` embedding columns — built on
+"""Vector math over `array<float>` embedding columns — built on the SQL
 higher-order functions (`zip_with`, `aggregate`) so the arithmetic
 runs JVM-side per row with no Python round-trip.  This is the
 similarity-search primitive set for the LLM-data-pipeline operators.
+
+Each helper takes column NAMES and returns one `F.expr` parse: the
+python-side lambda machinery would cost ~30 ms of py4j traffic per
+call, and the similarity family constructs a dozen of these per
+DataFrame build.
 
 Accumulate in double regardless of the storage type (float32
 embeddings) — at 64–4096 dims float accumulation error is visible in
@@ -12,22 +17,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def _col(x: Column | str) -> Column:
-    return F.col(x) if isinstance(x, str) else x
-
-
-# r13 (guide §5 driver / §7.3 planning): when callers pass plain column
-# NAMES — every operator call site does — build the expression with ONE
-# F.expr parse instead of the python-side higher-order-function
-# machinery, whose per-call lambda setup costs ~30 ms of py4j traffic;
-# the similarity family constructs a dozen of these per DataFrame
-# build.  The SQL spells the IDENTICAL arithmetic (double casts, 0D
-# init, same fold), so results and canonical plans are unchanged in
-# substance; the Column path stays for expression-valued inputs.
-def _is_name(x: Column | str) -> bool:
-    return isinstance(x, str) and x.isidentifier()
 
 
 def _dot_sql(a: str, b: str) -> str:
@@ -45,29 +34,18 @@ def _l2_sql(a: str) -> str:
     )
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    if _is_name(a) and _is_name(b):
-        return F.expr(_dot_sql(a, b))
-    prod = F.zip_with(_col(a), _col(b), lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prod, F.lit(0.0), lambda acc, v: acc + v)
+def dot(a: str, b: str) -> Column:
+    return F.expr(_dot_sql(a, b))
 
 
-def l2_norm(a: Column | str) -> Column:
-    if _is_name(a):
-        return F.expr(_l2_sql(a))
-    sq = F.aggregate(
-        _col(a), F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")
-    )
-    return F.sqrt(sq)
+def l2_norm(a: str) -> Column:
+    return F.expr(_l2_sql(a))
 
 
-def cosine_similarity(a: Column | str, b: Column | str) -> Column:
+def cosine_similarity(a: str, b: str) -> Column:
     """cos(a,b) with a zero-norm guard (ANSI-safe)."""
-    if _is_name(a) and _is_name(b):
-        na, nb = _l2_sql(a), _l2_sql(b)
-        return F.expr(
-            f"CASE WHEN {na} > 0 AND {nb} > 0 "
-            f"THEN {_dot_sql(a, b)} / ({na} * {nb}) ELSE 0D END"
-        )
-    na, nb = l2_norm(a), l2_norm(b)
-    return F.when((na > 0) & (nb > 0), dot(a, b) / (na * nb)).otherwise(F.lit(0.0))
+    na, nb = _l2_sql(a), _l2_sql(b)
+    return F.expr(
+        f"CASE WHEN {na} > 0 AND {nb} > 0 "
+        f"THEN {_dot_sql(a, b)} / ({na} * {nb}) ELSE 0D END"
+    )

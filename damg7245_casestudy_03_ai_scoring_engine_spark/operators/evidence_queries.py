@@ -2,9 +2,9 @@
 §2.9 M17/M18) over a demo evidence corpus derived from the
 `documents` table.
 
-The taxonomy here uses the synthetic corpus vocabulary (the real
-SOURCE/DIMENSION keyword seeds live in scoring/config.py and the
-engine functions in scoring/evidence.py are taxonomy-agnostic); the
+The taxonomy here uses the synthetic corpus vocabulary (the source
+profiles live in scoring/config.py and the engine functions in
+scoring/evidence.py are taxonomy-agnostic); the
 oracle SQL replays the same containment-join + aggregates + rubric
 when-ladder in DuckDB.
 """
@@ -82,15 +82,11 @@ def demo_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Flat (dimension, keyword) pairs — fed to keyword_matches' literal
-# fast path (filter() HOF, no join; see scoring/evidence.py).
+# Flat (dimension, keyword) pairs — keyword_matches ships them as a
+# literal array (filter() HOF, no join; see scoring/evidence.py).
 DEMO_KEYWORD_PAIRS: tuple[tuple[str, str], ...] = tuple(
     (d, k) for d, ks in DEMO_KEYWORDS.items() for k in ks
 )
-
-
-def demo_keywords_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(list(DEMO_KEYWORD_PAIRS), "dimension string, keyword string")
 
 
 # --- shared oracle CTE fragments ------------------------------------------
@@ -225,16 +221,16 @@ def evidence_dimension_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     per output — bit-identical between Spark and DuckDB at every sf,
     unlike double-sum aggregates whose low bits depend on summation
     order (the round-3 driver flake)."""
-    from ..functions.core import round_stable
+    from ..functions.core import round_stable_sql
     from ..scoring.evidence import weighted_dimension_features
 
     ev = demo_evidence(spark, sf_dir)
     out = weighted_dimension_features(ev, DEMO_KEYWORD_PAIRS, fixed_point=(10, 100))
-    return out.select(
+    return out.selectExpr(
         "company_id",
         "dimension",
-        round_stable("weighted_score", 4).alias("weighted_score"),
-        round_stable("confidence", 6).alias("confidence"),
+        f"{round_stable_sql('weighted_score', 4)} AS weighted_score",
+        f"{round_stable_sql('confidence', 6)} AS confidence",
         "evidence_count",
     )
 
@@ -292,16 +288,14 @@ def rubric_dimension_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     withm = agg.withColumn(
         "metric", quant_metric("n_hits", "n_evidence", "avg_rel")
     )
-    return withm.select(
+    return withm.selectExpr(
         "company_id",
         "dimension",
         "n_hits",
         "n_evidence",
-        F.expr("round(metric, 6)").alias("metric"),
-        F.round(rubric_score("n_hits", "metric"), 6).alias("rubric_score"),
-        F.round(rubric_confidence("n_hits", "metric"), 6).alias(
-            "rubric_confidence"
-        ),
+        "round(metric, 6) AS metric",
+        f"round({rubric_score('n_hits', 'metric')}, 6) AS rubric_score",
+        f"round({rubric_confidence('n_hits', 'metric')}, 6) AS rubric_confidence",
     )
 
 

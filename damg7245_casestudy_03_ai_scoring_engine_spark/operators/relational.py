@@ -19,7 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.core import clamp, conf_floor, safe_div
+from ..functions.core import clamp, conf_floor_sql, safe_div_sql
+from ..scoring.talent import hhi_from_counts
+from ..scoring.vr import cv_penalty_sql, cv_sql, vr_weighted_mean_sql
 from ..sources.catalog import load, ns
 from .registry import register
 
@@ -516,18 +518,15 @@ def weighted_mean_vr(spark: SparkSession, sf_dir: str) -> DataFrame:
     and [0,100] clamp — here over deterministic columns derived from
     lineitem keys.  Pure partial-aggregatable column math."""
     li = load(spark, sf_dir, "lineitem")
-    scored = li.select(
-        "l_returnflag",
-        ((F.col("l_partkey") * 7 + F.col("l_suppkey")) % 101).cast("double").alias("score"),
-        (F.col("l_quantity") / 50.0).alias("w"),
-        conf_floor((F.col("l_orderkey") % 10).cast("double") / 10.0).alias("conf_eff"),
+    scored = li.selectExpr(
+        "l_returnflag AS group_key",
+        "CAST((l_partkey * 7 + l_suppkey) % 101 AS DOUBLE) AS score",
+        "l_quantity / 50.0D AS w",
+        f"{conf_floor_sql('CAST(l_orderkey % 10 AS DOUBLE) / 10.0D')} AS conf_eff",
     )
-    wc = F.sum(F.col("w") * F.col("conf_eff"))
-    num = F.sum(F.col("score") * F.col("w") * F.col("conf_eff"))
-    return scored.groupBy(F.col("l_returnflag").alias("group_key")).agg(
-        F.round(clamp(F.when(wc != 0, num / wc).otherwise(F.lit(0.0)), 0.0, 100.0), 6).alias(
-            "vr_score"
-        ),
+    vr = vr_weighted_mean_sql("score", "w", "conf_eff")
+    return scored.groupBy("group_key").agg(
+        F.expr(f"round({vr}, 6)").alias("vr_score"),
         F.count(F.lit(1)).alias("n_items"),
     )
 
@@ -565,15 +564,8 @@ def hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("s_nationkey", "l_suppkey")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    w = Window.partitionBy("s_nationkey")
-    share = F.col("cnt").cast("double") / F.sum("cnt").over(w)
-    return (
-        per_supp.withColumn("share", share)
-        .groupBy(F.col("s_nationkey").alias("nation_key"))
-        .agg(
-            F.round(F.sum(F.pow(F.col("share"), 2)), 6).alias("hhi"),
-            F.sum("cnt").alias("n_items"),
-        )
+    return hhi_from_counts(per_supp, key="s_nationkey").selectExpr(
+        "s_nationkey AS nation_key", "round(hhi, 6) AS hhi", "n_items"
     )
 
 
@@ -596,13 +588,10 @@ def cv_penalty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Coefficient of variation → penalty clamp(1−0.25·cv, 0, 1) —
     reference scripts/run_scoring_engine.py:37-44 + app/scoring/utils.py:16-28."""
     li = load(spark, sf_dir, "lineitem")
-    cv_expr = F.when(
-        F.abs(F.avg("l_quantity")) > 0,
-        F.stddev_pop("l_quantity") / F.abs(F.avg("l_quantity")),
-    ).otherwise(F.lit(0.0))
+    cv = cv_sql("l_quantity")
     return li.groupBy(F.col("l_returnflag").alias("group_key")).agg(
-        F.round(cv_expr, 6).alias("cv"),
-        F.round(clamp(F.lit(1) - 0.25 * cv_expr, 0.0, 1.0), 6).alias("cv_penalty"),
+        F.expr(f"round({cv}, 6)").alias("cv"),
+        F.expr(f"round({cv_penalty_sql(cv)}, 6)").alias("cv_penalty"),
     )
 
 
@@ -1017,8 +1006,8 @@ def scalar_function_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(clamp(F.col("n_nationkey").cast("double") * 7.5, 10.0, 100.0), 2).alias(
             "clamped"
         ),
-        F.round(
-            safe_div(F.col("n_nationkey").cast("double"), F.col("n_regionkey"), -1.0), 4
+        F.expr(
+            f"round({safe_div_sql('CAST(n_nationkey AS DOUBLE)', 'n_regionkey', -1.0)}, 4)"
         ).alias("safe_ratio"),
         F.when(F.col("n_nationkey") % 2 == 0, F.lit("even")).otherwise(F.lit("odd")).alias(
             "parity"

@@ -413,11 +413,11 @@ def hr_position_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
     factor (app/scoring/position_factor.py:7-29) against the computed
     sector-average VR, and M11 prior blending
     (run_scoring_engine.py:47-49) toward the sector mean."""
-    from ..functions.core import blend, clamp as _clamp
+    from ..functions.core import blend_sql, clamp_sql
     from ..scoring.demo_domain import companies as companies_df
     from ..scoring.demo_domain import dimension_scores as ds_df
-    from ..scoring.hr import position_factor as pf_model_col
-    from ..scoring.pipeline import _hr_base_expr
+    from ..scoring.hr import position_factor
+    from ..scoring.pipeline import _hr_base_sql
     from ..scoring.vr import vr_scores
     from ..sources.catalog import load as _load
 
@@ -438,22 +438,27 @@ def hr_position_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(ord_cnt, "company_id")
         .crossJoin(F.broadcast(port))
         .join(F.broadcast(savg), "sector")
-        .withColumn("hr_base", _hr_base_expr(F.col("sector")))
-        .withColumn("mcap_pct", (F.col("position_factor") + 1.0) / 2.0)
+        .selectExpr(
+            "*",
+            f"{_hr_base_sql('sector')} AS hr_base",
+            "(position_factor + 1.0D) / 2.0D AS mcap_pct",
+        )
     )
-    baseline_norm = _clamp(F.col("hr_base") / 75.0, 0.7, 1.3)
-    intensity = F.col("n_orders").cast("double") / F.col("avg_orders")
-    hr_factor = F.when(
-        (F.col("n_orders") < 3) | (F.col("avg_orders") == 0), F.lit(1.0)
-    ).otherwise(_clamp(F.lit(1.0) + 0.5 * (intensity - 1.0) / baseline_norm, 0.0, 2.0))
-    pf = pf_model_col("vr_score", "sector_avg_vr", "mcap_pct")
-    return m.select(
+    baseline_norm = clamp_sql("hr_base / 75.0D", 0.7, 1.3)
+    intensity = "CAST(n_orders AS DOUBLE) / avg_orders"
+    hr_factor = (
+        "CASE WHEN n_orders < 3 OR avg_orders = 0 THEN 1.0D ELSE "
+        f"{clamp_sql(f'1.0D + 0.5D * ({intensity} - 1.0D) / {baseline_norm}', 0.0, 2.0)}"
+        " END"
+    )
+    pf = position_factor("vr_score", "sector_avg_vr", "mcap_pct")
+    return m.selectExpr(
         "company_id",
         "sector",
         "n_orders",
-        F.round(hr_factor, 6).alias("hr_factor"),
-        F.round(pf, 6).alias("position_factor_model"),
-        F.round(blend("vr_score", F.col("sector_avg_vr"), 0.2), 6).alias("vr_blended"),
+        f"round({hr_factor}, 6) AS hr_factor",
+        f"round({pf}, 6) AS position_factor_model",
+        f"round({blend_sql('vr_score', 'sector_avg_vr', 0.2)}, 6) AS vr_blended",
     )
 
 

@@ -23,19 +23,21 @@ Reference semantics reproduced:
 - quant-metric proxy (rubric_scorer.py:245-256):
   clamp(0.45·ws/30 + 0.35·ev/40 + 0.20·rel, 0, 1).
 
-Spark shape: the taxonomy is a broadcast (dimension, keyword) table;
-the containment match is a broadcast nested-loop join filtered by
-`contains` — no shuffle on the evidence side; everything downstream
-is groupBy aggregates and when-ladders (ordered descent must be a
-when-chain, not a join, to preserve first-match-wins).
+Spark shape: the taxonomy is a literal array of (dimension, keyword)
+structs filtered by `contains` — no join, no shuffle on the evidence
+side; everything downstream is groupBy aggregates and CASE ladders
+(ordered descent must be a CASE ladder, not a join, to preserve
+first-match-wins).
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.core import clamp
+from ..functions.core import clamp_sql, flit
 
 # Rubric level bands (reference rubric_scorer.py:83-133 shape): level,
 # min keyword hits, min metric, score band [lo, hi].
@@ -47,31 +49,25 @@ RUBRIC_LEVELS: tuple[tuple[int, int, float, float, float], ...] = (
     (1, 0, 0.00, 10.0, 30.0),
 )
 
+# (dimension, keyword) taxonomy pairs.
+KeywordPairs = Sequence[tuple[str, str]]
 
-def keyword_matches(evidence: DataFrame, keywords) -> DataFrame:
+
+def keyword_matches(evidence: DataFrame, keywords: KeywordPairs) -> DataFrame:
     """J5: evidence × taxonomy containment match.
 
     evidence: evidence_id, company_id, source, text, confidence, reliability
-    keywords: either a (dimension, keyword) DataFrame — broadcast
-    nested-loop join — or a plain sequence of (dimension, keyword)
-    pairs, which takes the join-free fast path: the taxonomy becomes a
-    literal array<struct> column and the match is a `filter()`
-    higher-order function + `explode`.  No join, no shuffle, stays
+    keywords: a sequence of (dimension, keyword) pairs.  The taxonomy
+    becomes a literal array<struct> column and the match is a
+    `filter()` higher-order function + `explode`: no join, no shuffle,
     inside whole-stage codegen — at 100 TB the taxonomy (~70 entries)
-    should always ship as a literal, never as a join side.
+    should always ship as a literal, never as a join side.  The
+    literal, the filter and the explode are ONE F.expr parse.
 
     Returns one row per (evidence, dimension, keyword) hit; substring
     semantics — deliberately not word-boundary (F3 vs F2).
     """
-    if isinstance(keywords, DataFrame):
-        kw = F.broadcast(keywords)
-        return evidence.join(kw, F.col("text").contains(F.col("keyword")))
-    # ONE F.expr parse for the literal taxonomy + containment filter
-    # (r13, guide §5/§7.3): the former per-pair F.lit/F.struct build
-    # cost ~210 py4j round trips per DataFrame construction and the
-    # python-lambda filter another HOF setup; the SQL spells the same
-    # array<struct<dimension,keyword>> literal and the same substring
-    # containment, so the plan and results are unchanged.
+
     def q(s: str) -> str:
         return "'" + s.replace("'", "''") + "'"
 
@@ -89,19 +85,18 @@ def keyword_matches(evidence: DataFrame, keywords) -> DataFrame:
     )
 
 
-def hit_raw_score(evidence_id: Column, keyword: Column) -> Column:
+def hit_raw_score(evidence_id: str, keyword: str) -> str:
     """Deterministic varying per-hit raw score in [40, 100]:
-    40 + (evidence_id·7 + len(keyword)·13) mod 61.  Pure integer
-    arithmetic → bit-identical between Spark and any ANSI-SQL oracle;
-    varies across hit rows so A7's weighted mean actually weights
-    (reference evidence_mapper.py:159-213)."""
+    40 + (evidence_id·7 + len(keyword)·13) mod 61, as an SQL fragment.
+    Pure integer arithmetic → bit-identical between Spark and any
+    ANSI-SQL oracle; varies across hit rows so A7's weighted mean
+    actually weights (reference evidence_mapper.py:159-213)."""
     return (
-        F.lit(40)
-        + (evidence_id * F.lit(7) + F.length(keyword) * F.lit(13)) % F.lit(61)
-    ).cast("double")
+        f"CAST(40 + ({evidence_id} * 7 + length({keyword}) * 13) % 61 AS DOUBLE)"
+    )
 
 
-def dimension_hits(evidence: DataFrame, keywords: DataFrame) -> DataFrame:
+def dimension_hits(evidence: DataFrame, keywords: KeywordPairs) -> DataFrame:
     """Per (company, dimension): keyword hit stats from J5 matches."""
     m = keyword_matches(evidence, keywords)
     return m.groupBy("company_id", "dimension").agg(
@@ -112,131 +107,75 @@ def dimension_hits(evidence: DataFrame, keywords: DataFrame) -> DataFrame:
 
 
 def weighted_dimension_features(
-    evidence: DataFrame,
-    keywords: DataFrame,
-    raw: Column | None = None,
-    fixed_point: tuple[int, int] | None = None,
+    evidence: DataFrame, keywords: KeywordPairs, fixed_point: tuple[int, int]
 ) -> DataFrame:
     """A7: per (company, dimension) weighted score & confidence.
 
-    `raw` is the per-hit raw score column (reference
-    evidence_mapper.py:159-213 weights *varying* raw scores with
-    Σ(raw·conf·rel)/Σ(conf·rel)); callers must supply one that varies
-    across hit rows — a constant would make the weighted mean
-    degenerate (identically that constant).  Defaults to a
-    deterministic doc/keyword-derived score in [40, 100] so the
-    weighting path is always exercised.  Confidence is
-    Σ(conf·rel)/count; empty dimensions get the 50/0.5 defaults
-    downstream via coalesce.
+    The per-hit raw score is `hit_raw_score` — it varies across hit
+    rows (reference evidence_mapper.py:159-213 weights *varying* raw
+    scores with Σ(raw·conf·rel)/Σ(conf·rel); a constant would make the
+    weighted mean degenerate).  Confidence is Σ(conf·rel)/count; empty
+    dimensions get the 50/0.5 defaults.
 
-    `fixed_point=(conf_scale, rel_scale)` switches the sums to exact
-    scaled-integer arithmetic (order-independent, reproducible at any
-    partitioning — see inline comment) when confidence/reliability are
-    fixed-point decimals (e.g. (10, 100) for 1dp confidence × 2dp
-    reliability).  `raw` must be integer-valued on this path.
+    `fixed_point=(conf_scale, rel_scale)` scales confidence and
+    reliability (fixed-point decimals, e.g. (10, 100) for 1dp
+    confidence × 2dp reliability) to integers.  Double-sum aggregates
+    are NOT reproducible across partitionings (summation order changes
+    the low bits; at a rounding boundary that flips the rounded value
+    — observed live on this query's `confidence` at sf0.01 / 32
+    partitions), so the sums run on LONGS (exact, order-independent)
+    and divide ONCE at the end — the single IEEE division is
+    bit-identical in every engine and every partitioning.
     """
     m = keyword_matches(evidence, keywords)
-    if raw is None:
-        raw = hit_raw_score(F.col("evidence_id"), F.col("keyword"))
-    if fixed_point is not None:
-        # Exact integer fixed-point path: double-sum aggregates are NOT
-        # reproducible across partitionings (summation order changes
-        # the low bits; at a rounding boundary that flips the rounded
-        # value — observed live on this query's `confidence` at sf0.01
-        # / 32 partitions).  When confidence/reliability are fixed-
-        # point decimals, scale them to integers, sum LONGS (exact,
-        # order-independent), and divide ONCE at the end — the single
-        # IEEE division is bit-identical in every engine and every
-        # partitioning.  This is the path to use at 100 TB.
-        conf_scale, rel_scale = fixed_point
-        c_i = F.round(F.col("confidence") * conf_scale).cast("long")
-        r_i = F.round(F.col("reliability") * rel_scale).cast("long")
-        raw_i = raw.cast("long")
-        den_i = F.sum(c_i * r_i)
-        num_i = F.sum(raw_i * c_i * r_i)
-        cnt = F.count(F.lit(1))
-        scale = float(conf_scale * rel_scale)
-        return m.groupBy("company_id", "dimension").agg(
-            F.when(den_i != 0, num_i.cast("double") / den_i.cast("double"))
-            .otherwise(F.lit(50.0))
-            .alias("weighted_score"),
-            F.when(cnt > 0, den_i.cast("double") / (F.lit(scale) * cnt))
-            .otherwise(F.lit(0.5))
-            .alias("confidence"),
-            cnt.alias("evidence_count"),
-        )
-    num = F.sum(raw * F.col("confidence") * F.col("reliability"))
-    den = F.sum(F.col("confidence") * F.col("reliability"))
+    conf_scale, rel_scale = fixed_point
+    c_i = f"CAST(round(confidence * {conf_scale}) AS BIGINT)"
+    r_i = f"CAST(round(reliability * {rel_scale}) AS BIGINT)"
+    raw_i = f"CAST({hit_raw_score('evidence_id', 'keyword')} AS BIGINT)"
+    den_i = f"sum({c_i} * {r_i})"
+    num_i = f"sum({raw_i} * {c_i} * {r_i})"
+    scale = flit(float(conf_scale * rel_scale))
     return m.groupBy("company_id", "dimension").agg(
-        F.when(den != 0, num / den).otherwise(F.lit(50.0)).alias("weighted_score"),
-        F.when(
-            F.count(F.lit(1)) > 0,
-            F.sum(F.col("confidence") * F.col("reliability")) / F.count(F.lit(1)),
-        )
-        .otherwise(F.lit(0.5))
-        .alias("confidence"),
-        F.count(F.lit(1)).alias("evidence_count"),
+        F.expr(
+            f"CASE WHEN {den_i} != 0 "
+            f"THEN CAST({num_i} AS DOUBLE) / CAST({den_i} AS DOUBLE) ELSE 50.0D END"
+        ).alias("weighted_score"),
+        F.expr(
+            f"CASE WHEN count(1) > 0 "
+            f"THEN CAST({den_i} AS DOUBLE) / ({scale} * count(1)) ELSE 0.5D END"
+        ).alias("confidence"),
+        F.expr("count(1)").alias("evidence_count"),
     )
 
 
-def quant_metric(
-    weighted_signals: Column | str,
-    evidence_count: Column | str,
-    reliability: Column | str,
-) -> Column:
+def quant_metric(weighted_signals: str, evidence_count: str, reliability: str) -> Column:
     """M18: metric = clamp(0.45·ws/30 + 0.35·ev/40 + 0.20·rel, 0, 1)
-    (rubric_scorer.py:245-256).  Name inputs take the single-parse
-    twin (r13, guide §5) — identical arithmetic, commutative-multiply
-    literal placement aside."""
-    if all(isinstance(c, str) for c in (weighted_signals, evidence_count, reliability)):
-        from ..functions.core import clamp_sql
-
-        return F.expr(
-            clamp_sql(
-                f"0.45D * {weighted_signals} / 30.0D"
-                f" + 0.35D * {evidence_count} / 40.0D"
-                f" + 0.2D * {reliability}",
-                0.0,
-                1.0,
-            )
+    (rubric_scorer.py:245-256)."""
+    return F.expr(
+        clamp_sql(
+            f"0.45D * {weighted_signals} / 30.0D"
+            f" + 0.35D * {evidence_count} / 40.0D"
+            f" + 0.2D * {reliability}",
+            0.0,
+            1.0,
         )
-    return clamp(
-        0.45 * weighted_signals / 30.0 + 0.35 * evidence_count / 40.0 + 0.20 * reliability,
-        0.0,
-        1.0,
     )
 
 
-def rubric_score(hits: Column | str, metric: Column | str) -> Column:
-    """M17 ordered level descent as a when-chain (first satisfied level
-    wins, L5→L1) with in-band interpolation.  Name inputs take the
-    single-parse CASE twin (r13, guide §5)."""
-    if isinstance(hits, str) and isinstance(metric, str):
-        from ..functions.core import flit
-
-        arms = " ".join(
-            f"WHEN {hits} >= {min_hits} AND {metric} >= {flit(min_metric)} "
-            f"THEN {flit(lo)} + {flit(hi - lo)} * least(1.0D, "
-            f"CAST({hits} AS DOUBLE) / {flit(float(max(min_hits, 1)))})"
-            for _level, min_hits, min_metric, lo, hi in RUBRIC_LEVELS[:-1]
-        )
-        return F.expr(f"CASE {arms} ELSE 10.0D END")
-    expr = None
-    for level, min_hits, min_metric, lo, hi in RUBRIC_LEVELS[:-1]:
-        interp = F.lit(lo) + (hi - lo) * F.least(
-            F.lit(1.0), hits.cast("double") / F.lit(float(max(min_hits, 1)))
-        )
-        cond = (hits >= min_hits) & (metric >= min_metric)
-        expr = F.when(cond, interp) if expr is None else expr.when(cond, interp)
-    # L1 default: score 10 (rubric_scorer.py:221-224)
-    return expr.otherwise(F.lit(10.0))
+def rubric_score(hits: str, metric: str) -> str:
+    """M17 ordered level descent as a CASE ladder (first satisfied
+    level wins, L5→L1) with in-band interpolation; L1 default score 10
+    (rubric_scorer.py:221-224).  SQL fragment."""
+    arms = " ".join(
+        f"WHEN {hits} >= {min_hits} AND {metric} >= {flit(min_metric)} "
+        f"THEN {flit(lo)} + {flit(hi - lo)} * least(1.0D, "
+        f"CAST({hits} AS DOUBLE) / {flit(float(max(min_hits, 1)))})"
+        for _level, min_hits, min_metric, lo, hi in RUBRIC_LEVELS[:-1]
+    )
+    return f"CASE {arms} ELSE 10.0D END"
 
 
-def rubric_confidence(hits: Column | str, metric: Column | str) -> Column:
-    """min(0.95, 0.50 + 0.08·hits + 0.30·metric) (rubric_scorer.py:212-218)."""
-    if isinstance(hits, str) and isinstance(metric, str):
-        return F.expr(
-            f"least(0.95D, 0.5D + 0.08D * CAST({hits} AS DOUBLE)"
-            f" + 0.3D * {metric})"
-        )
-    return F.least(F.lit(0.95), F.lit(0.50) + 0.08 * hits.cast("double") + 0.30 * metric)
+def rubric_confidence(hits: str, metric: str) -> str:
+    """min(0.95, 0.50 + 0.08·hits + 0.30·metric) (rubric_scorer.py:212-218),
+    as an SQL fragment."""
+    return f"least(0.95D, 0.5D + 0.08D * CAST({hits} AS DOUBLE) + 0.3D * {metric})"

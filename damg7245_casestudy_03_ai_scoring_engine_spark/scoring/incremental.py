@@ -29,7 +29,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .demo_domain import companies
+from .demo_domain import companies, evidence_from
 from .pipeline import assemble_composite
 from .talent import hhi_from_counts
 from .vr import vr_scores
@@ -114,13 +114,13 @@ def score_from_partials(
     history rescans."""
     dims = spark.read.parquet(f"{gold_dir}/{DIM_PARTIALS}")
     supp = spark.read.parquet(f"{gold_dir}/{SUPP_COUNTS}")
-    ds = dims.select(
+    ds = dims.selectExpr(
         "company_id",
         "dimension",
-        (F.col("sum_score") / F.col("n")).alias("score"),
-        F.lit(None).cast("double").alias("weight"),
-        (F.col("sum_conf") / F.col("n")).alias("confidence"),
-        F.col("n").alias("evidence_count"),
+        "sum_score / n AS score",
+        "CAST(NULL AS DOUBLE) AS weight",
+        "sum_conf / n AS confidence",
+        "n AS evidence_count",
     )
     vr = vr_scores(ds)
     supplier_hhi = hhi_from_counts(supp, key="company_id", count_col="n")
@@ -140,8 +140,6 @@ def stream_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Evidence rows as a STREAM: lineitem arrives as files
     (readStream), orders is the static side of a stream-static join —
     the same derivation as demo_domain.evidence_rows, incremental."""
-    from .demo_domain import _dimension_expr
-
     li = (
         spark.readStream.schema(LINEITEM_SCHEMA)
         .option("maxFilesPerTrigger", 1)
@@ -149,18 +147,7 @@ def stream_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(sf_dir)
         .select("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber")
     )
-    from ..sources.catalog import load
-
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    return li.join(o, li.l_orderkey == o.o_orderkey).select(
-        F.col("o_custkey").alias("company_id"),
-        _dimension_expr(F.col("l_linenumber")).alias("dimension"),
-        ((F.col("l_partkey") * 7 + F.col("l_suppkey")) % 101)
-        .cast("double")
-        .alias("score_raw"),
-        ((F.col("l_orderkey") % 10).cast("double") / 10.0).alias("conf_raw"),
-        F.col("l_suppkey").alias("supp_key"),
-    )
+    return evidence_from(spark, sf_dir, li)
 
 
 def run_incremental_scoring(

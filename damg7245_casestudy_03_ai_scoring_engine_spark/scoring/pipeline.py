@@ -25,17 +25,8 @@ from .talent import hhi, hhi_penalty_factor
 from .vr import vr_scores
 
 
-def _hr_base_expr(sector_col):
-    it = iter(SECTOR_HR_BASE.items())
-    s0, v0 = next(it)
-    expr = F.when(sector_col == s0, F.lit(v0))
-    for s, v in it:
-        expr = expr.when(sector_col == s, F.lit(v))
-    return expr.otherwise(F.lit(DEFAULT_HR_BASE))
-
-
 def _hr_base_sql(sector_name: str) -> str:
-    """SQL twin of `_hr_base_expr` — same CASE ladder, one parse."""
+    """Sector → hr_base CASE ladder (default 75)."""
     arms = " ".join(
         f"WHEN {sector_name} = '{s}' THEN {flit(v)}"
         for s, v in SECTOR_HR_BASE.items()
@@ -87,15 +78,12 @@ def assemble_composite(
     composite + band.  Inputs: vr_scores output, hhi output
     (company_id, hhi, n_items), companies (company_id, sector,
     position_factor)."""
-    # withColumns batches of single-parse expressions (r13, guide §5
-    # driver / §7.3 planning): every classic-API DataFrame op eagerly
-    # re-analyzes its whole subtree JVM-side and every Column operator
-    # is a py4j round trip, so the former 7-op withColumn chain of
-    # Column ladders paid 7 analyzer walks plus ~100 round trips;
-    # grouped into dependency levels with each column ONE F.expr parse
-    # (the helpers' single-parse twins), same named columns, same
-    # arithmetic.  Joins unchanged (inner, company_id) — comp's
-    # columns don't collide with the vr⋈hhi set.
+    # withColumns batches of single-parse expressions: every
+    # classic-API DataFrame op eagerly re-analyzes its whole subtree
+    # JVM-side and every Column operator is a py4j round trip, so the
+    # columns are grouped into dependency levels with each column ONE
+    # F.expr parse of the helpers' SQL fragments.  Inner joins on
+    # company_id; comp's columns don't collide with the vr⋈hhi set.
     scored = (
         vr.join(supplier_hhi, "company_id")
         .join(comp, "company_id")

@@ -6,7 +6,7 @@ Reference semantics:
   threshold (+magnitude); a negative rule fires iff dim_a ≥ threshold
   AND dim_b < threshold (+negative magnitude).  Total clamped ±15.
 - Formula synergy (synergy.py:132-156):
-  Synergy = (VR·HR/100) · Alignment · Timing, Alignment default
+  Synergy = (VR·HR/100) · Alignment · Timing, Alignment
   1−|VR−HR|/100 clamped [0,1], Timing clamped [0.8,1.2], result
   clamped [0,100].
 
@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.core import clamp
+from ..functions.core import clamp_sql, flit
 from .config import RULE_SYNERGY_CAP
 
 
@@ -49,60 +49,30 @@ def rule_synergy(dimension_scores: DataFrame, rules: DataFrame) -> DataFrame:
         )
         .drop("company_id_b", "dim_b_score")
     )
-    fired: Column = (
-        F.when(
-            (F.col("synergy_type") == "positive")
-            & (F.col("score_a") >= F.col("threshold"))
-            & (F.col("score_b") >= F.col("threshold")),
-            F.col("magnitude"),
-        )
-        .when(
-            (F.col("synergy_type") == "negative")
-            & (F.col("score_a") >= F.col("threshold"))
-            & (F.col("score_b") < F.col("threshold")),
-            F.col("magnitude"),
-        )
-        .otherwise(F.lit(0.0))
+    fired = (
+        "CASE WHEN synergy_type = 'positive' AND score_a >= threshold"
+        " AND score_b >= threshold THEN magnitude"
+        " WHEN synergy_type = 'negative' AND score_a >= threshold"
+        " AND score_b < threshold THEN magnitude ELSE 0.0D END"
     )
     return (
-        joined.withColumn("contribution", fired)
+        joined.withColumn("contribution", F.expr(fired))
         .groupBy("company_id")
         .agg(
-            clamp(F.sum("contribution"), -RULE_SYNERGY_CAP, RULE_SYNERGY_CAP).alias(
-                "rule_synergy"
-            ),
-            F.sum((fired != 0).cast("long")).alias("n_rules_fired"),
+            F.expr(
+                clamp_sql("sum(contribution)", -RULE_SYNERGY_CAP, RULE_SYNERGY_CAP)
+            ).alias("rule_synergy"),
+            F.expr("sum(CAST(contribution != 0 AS BIGINT))").alias("n_rules_fired"),
         )
     )
 
 
-def formula_synergy(
-    vr: Column | str,
-    hr: Column | str,
-    alignment: Column | None = None,
-    timing: Column | float = 1.0,
-) -> Column:
+def formula_synergy(vr: str, hr: str, timing: float = 1.0) -> Column:
     """Formula synergy column: (VR·HR/100)·Alignment·Timing with the
-    reference clamps (synergy.py:132-156)."""
-    if (
-        isinstance(vr, str)
-        and isinstance(hr, str)
-        and alignment is None
-        and isinstance(timing, (int, float))
-    ):
-        # single-parse twin (r13, guide §5): same default alignment,
-        # same constant-timing clamp, same grouping as the Column path
-        from ..functions.core import clamp_sql, flit
-
-        align = clamp_sql(f"1.0D - abs({vr} - {hr}) / 100.0D", 0.0, 1.0)
-        t = clamp_sql(flit(float(timing)), 0.8, 1.2)
-        return F.expr(
-            clamp_sql(f"(({vr} * {hr} / 100.0D) * {align}) * {t}", 0.0, 100.0)
-        )
-    vr = F.col(vr) if isinstance(vr, str) else vr
-    hr = F.col(hr) if isinstance(hr, str) else hr
-    if alignment is None:
-        alignment = clamp(F.lit(1.0) - F.abs(vr - hr) / 100.0, 0.0, 1.0)
-    t = F.lit(float(timing)) if isinstance(timing, (int, float)) else timing
-    t = clamp(t, 0.8, 1.2)
-    return clamp((vr * hr / 100.0) * alignment * t, 0.0, 100.0)
+    reference clamps (synergy.py:132-156); Alignment is the default
+    1−|VR−HR|/100, Timing a constant."""
+    align = clamp_sql(f"1.0D - abs({vr} - {hr}) / 100.0D", 0.0, 1.0)
+    t = clamp_sql(flit(float(timing)), 0.8, 1.2)
+    return F.expr(
+        clamp_sql(f"(({vr} * {hr} / 100.0D) * {align}) * {t}", 0.0, 100.0)
+    )

@@ -23,6 +23,29 @@ from .config import CONFIDENCE_FLOOR, DEFAULT_DIM_WEIGHTS
 from .config import dimension_case_sql
 
 
+def vr_weighted_mean_sql(score: str, w: str, conf_eff: str) -> str:
+    """Aggregate fragment Σ(score·w·conf_eff)/Σ(w·conf_eff), 0 when
+    the weight total is 0, clamped [0,100]."""
+    return clamp_sql(
+        f"CASE WHEN sum({w} * {conf_eff}) != 0 "
+        f"THEN sum({score} * {w} * {conf_eff}) / sum({w} * {conf_eff}) "
+        "ELSE 0.0D END",
+        0.0,
+        100.0,
+    )
+
+
+def cv_sql(x: str) -> str:
+    """Aggregate fragment: coefficient of variation stddev_pop/|mean|,
+    0 when the mean is 0."""
+    return f"CASE WHEN abs(avg({x})) > 0 THEN stddev_pop({x}) / abs(avg({x})) ELSE 0.0D END"
+
+
+def cv_penalty_sql(cv: str) -> str:
+    """clamp(1−0.25·cv, 0, 1) (scripts/run_scoring_engine.py:37-44)."""
+    return clamp_sql(f"1.0D - 0.25D * {cv}", 0.0, 1.0)
+
+
 def vr_scores(dimension_scores: DataFrame, *, with_cv_penalty: bool = True) -> DataFrame:
     """Per-company VR: Σ(score·w·conf_eff)/Σ(w·conf_eff), conf_eff =
     max(conf, 0.20), clamped [0,100]; optional CV penalty
@@ -31,9 +54,7 @@ def vr_scores(dimension_scores: DataFrame, *, with_cv_penalty: bool = True) -> D
 
     Returns: company_id, vr_raw, cv, cv_penalty, vr_score.
     """
-    # Single-parse build (r13, guide §5/§7.3): the same named columns
-    # and arithmetic as the former Column-chain construction, composed
-    # as SQL fragments python-side — one parse per output column
+    # SQL fragments composed python-side: one parse per output column
     # instead of a py4j round trip per operator.
     ds = dimension_scores.selectExpr(
         "company_id",
@@ -43,24 +64,12 @@ def vr_scores(dimension_scores: DataFrame, *, with_cv_penalty: bool = True) -> D
         f"{dimension_case_sql('dimension', DEFAULT_DIM_WEIGHTS)}) AS w",
         f"{conf_floor_sql('confidence', CONFIDENCE_FLOOR)} AS conf_eff",
     )
-    vr_raw_sql = clamp_sql(
-        "CASE WHEN sum(w * conf_eff) != 0 "
-        "THEN sum(score * w * conf_eff) / sum(w * conf_eff) "
-        "ELSE 0.0D END",
-        0.0,
-        100.0,
-    )
-    cv_sql = (
-        "CASE WHEN abs(avg(score)) > 0 "
-        "THEN stddev_pop(score) / abs(avg(score)) ELSE 0.0D END"
-    )
     agg = ds.groupBy("company_id").agg(
-        F.expr(vr_raw_sql).alias("vr_raw"), F.expr(cv_sql).alias("cv")
+        F.expr(vr_weighted_mean_sql("score", "w", "conf_eff")).alias("vr_raw"),
+        F.expr(cv_sql("score")).alias("cv"),
     )
     if not with_cv_penalty:
         return agg.withColumn("vr_score", F.col("vr_raw"))
-    return agg.withColumns(
-        {"cv_penalty": F.expr(clamp_sql("1.0D - 0.25D * cv", 0.0, 1.0))}
-    ).withColumn(
+    return agg.withColumns({"cv_penalty": F.expr(cv_penalty_sql("cv"))}).withColumn(
         "vr_score", F.expr(clamp_sql("vr_raw * cv_penalty", 0.0, 100.0))
     )

@@ -55,8 +55,9 @@ _FAN_OUT_MEMO: dict[tuple[str, str], bool] = {}
 def _prune_dead_sessions(app_id: str) -> None:
     """Drop memo entries owned by other (stopped) sessions so the
     memos cannot pin DataFrame/py4j object graphs of dead sessions in
-    long-lived multi-session processes (r13 advisor note).  One pass
-    over small dicts; runs only when a foreign key is present."""
+    long-lived multi-session processes.  Every memo entry point calls
+    this, and it checks all three memos — a session that only touches
+    one of them still frees the others.  One pass over small dicts."""
     for memo in (_SCHEMA_MEMO, _DF_MEMO, _FAN_OUT_MEMO):
         stale = [k for k in memo if k[0] != app_id]
         for k in stale:
@@ -128,8 +129,7 @@ def load(spark: SparkSession, sf_dir: str, name: str, fan_out: bool = False) -> 
     path = f"{sf_dir}/{name}.parquet"
     app_id = spark.sparkContext.applicationId
     memo_key = (app_id, path)
-    if any(k[0] != app_id for k in _SCHEMA_MEMO):
-        _prune_dead_sessions(app_id)
+    _prune_dead_sessions(app_id)
     schema = _SCHEMA_MEMO.get(memo_key)
     if schema is None:
         df = spark.read.parquet(path)
@@ -189,7 +189,9 @@ def read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
     access) and a rewritten path invalidates the entry — the next
     access re-resolves the file index instead of serving a stale
     listing."""
-    memo_key = (spark.sparkContext.applicationId, path)
+    app_id = spark.sparkContext.applicationId
+    memo_key = (app_id, path)
+    _prune_dead_sessions(app_id)
     sig = _layout_sig(path)
     hit = _DF_MEMO.get(memo_key)
     if hit is not None and hit[1] == sig:

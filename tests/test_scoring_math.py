@@ -16,13 +16,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from damg7245_casestudy_03_ai_scoring_engine_spark.functions.core import (
-    blend,
-    clamp,
-    safe_div,
-    score_band,
+    blend_sql,
+    clamp_sql,
+    flit,
+    safe_div_sql,
+    score_band_sql,
 )
 from damg7245_casestudy_03_ai_scoring_engine_spark.scoring import config as C
-from damg7245_casestudy_03_ai_scoring_engine_spark.scoring.composite import composite_score
+from damg7245_casestudy_03_ai_scoring_engine_spark.scoring.composite import composite_sql
 from damg7245_casestudy_03_ai_scoring_engine_spark.scoring.hr import hr_score, position_factor
 from damg7245_casestudy_03_ai_scoring_engine_spark.scoring.synergy import (
     formula_synergy,
@@ -46,6 +47,18 @@ def _dim_rows(scores, confs=None, weights=None):
 
 
 DIM_SCHEMA = "company_id string, dimension string, score double, weight double, confidence double"
+
+
+def _eval(spark, inputs: dict, **outputs):
+    """One row of named double columns (`inputs`), projected through
+    the shipped helpers: each output is an SQL fragment or a Column."""
+    df = spark.createDataFrame(
+        [tuple(float(v) for v in inputs.values())],
+        ", ".join(f"{k} double" for k in inputs),
+    )
+    return df.select(
+        *[(F.expr(e) if isinstance(e, str) else e).alias(k) for k, e in outputs.items()]
+    ).collect()[0]
 
 
 def test_vr_bounded_and_weighted(spark):
@@ -100,11 +113,12 @@ def test_rule_synergy_activation_and_cap(spark):
 def test_formula_synergy_closed_form(spark):
     # Reference closed form (synergy.py:132-156): VR=80, HR=60 →
     # (80·60/100)·(1−0.2)·1.0 = 48·0.8 = 38.4
-    df = spark.range(1).select(
-        formula_synergy(F.lit(80.0), F.lit(60.0)).alias("syn"),
-        formula_synergy(F.lit(80.0), F.lit(60.0), timing=1.5).alias("syn_clamped"),
+    row = _eval(
+        spark,
+        {"vr": 80.0, "hr": 60.0},
+        syn=formula_synergy("vr", "hr"),
+        syn_clamped=formula_synergy("vr", "hr", timing=1.5),
     )
-    row = df.collect()[0]
     assert row.syn == pytest.approx(38.4)
     assert row.syn_clamped == pytest.approx(38.4 * 1.2 / 1.0)  # timing clamped to 1.2
 
@@ -112,10 +126,8 @@ def test_formula_synergy_closed_form(spark):
 def test_composite_closed_form(spark):
     # (1−β)(α·VR+(1−α)·HR)+β·Syn with α=.6 β=.12:
     # VR=80, HR=70, Syn=40 → 0.88·(48+28)+0.12·40 = 66.88+4.8 = 71.68
-    row = (
-        spark.range(1)
-        .select(composite_score(F.lit(80.0), F.lit(70.0), F.lit(40.0)).alias("c"))
-        .collect()[0]
+    row = _eval(
+        spark, {"vr": 80.0, "hr": 70.0, "syn": 40.0}, c=composite_sql("vr", "hr", "syn")
     )
     assert row.c == pytest.approx(71.68)
 
@@ -126,7 +138,7 @@ def test_composite_closed_form(spark):
      (55, "Progressing"), (61, "Advanced"), (80.5, "Leading"), (100, "Leading")],
 )
 def test_band_edges(spark, score, band):
-    row = spark.range(1).select(score_band(F.lit(float(score))).alias("b")).collect()[0]
+    row = _eval(spark, {"score": score}, b=score_band_sql("score"))
     assert row.b == band
 
 
@@ -149,19 +161,18 @@ def test_hhi_penalty_tiers(spark):
 def test_talent_risk_adjustment_monotone(spark):
     # monotone-inverse in TC (test_property_hypothesis.py:53-60)
     df = spark.createDataFrame([(t / 10.0,) for t in range(11)], "tc double")
-    vals = [r.adj for r in df.select(talent_risk_adjustment("tc").alias("adj")).orderBy("tc").collect()]
+    adj = df.selectExpr("tc", f"{talent_risk_adjustment('tc')} AS adj")
+    vals = [r.adj for r in adj.orderBy("tc").collect()]
     assert all(a >= b for a, b in zip(vals, vals[1:]))
     assert vals[0] == 1.0 and vals[-1] == pytest.approx(1 - 0.15 * 0.75)
 
 
 def test_hr_score_and_position_factor(spark):
-    row = (
-        spark.range(1)
-        .select(
-            hr_score(F.lit(80.0), F.lit(0.5)).alias("hr"),
-            position_factor(F.lit(90.0), F.lit(70.0), F.lit(0.95)).alias("pf"),
-        )
-        .collect()[0]
+    row = _eval(
+        spark,
+        {"hr_base": 80.0, "pf_in": 0.5, "vr": 90.0, "sector_avg": 70.0, "mcap": 0.95},
+        hr=hr_score("hr_base", "pf_in"),
+        pf=position_factor("vr", "sector_avg", "mcap"),
     )
     assert row.hr == pytest.approx(80 * 1.075)
     # 0.6·clamp(20/50)+0.4·clamp(0.9) = 0.6·0.4+0.4·0.9 = 0.6
@@ -169,15 +180,13 @@ def test_hr_score_and_position_factor(spark):
 
 
 def test_scalar_helpers(spark):
-    row = (
-        spark.range(1)
-        .select(
-            clamp(F.lit(150.0), 0, 100).alias("c1"),
-            clamp(F.lit(-5.0), 0, 100).alias("c2"),
-            safe_div(F.lit(10.0), F.lit(0.0), -1.0).alias("d"),
-            blend(F.lit(100.0), 50.0, 0.2).alias("b"),
-        )
-        .collect()[0]
+    row = _eval(
+        spark,
+        {"hi": 150.0, "lo": -5.0, "num": 10.0, "den": 0.0, "x": 100.0, "target": 50.0},
+        c1=clamp_sql("hi", 0, 100),
+        c2=clamp_sql("lo", 0, 100),
+        d=safe_div_sql("num", "den", -1.0),
+        b=blend_sql("x", "target", 0.2),
     )
     assert (row.c1, row.c2, row.d) == (100.0, 0.0, -1.0)
     assert row.b == pytest.approx(90.0)
@@ -191,16 +200,18 @@ def test_golden_portfolio_ranges(spark):
     vr/hr/synergy are derived from the priors exactly like the
     reference's prior-dominated path: VR≈vr_target, HR from a
     neutral-sector base with pf_target, formula synergy."""
-    rows = [(t, *v) for t, v in C.PORTFOLIO_PRIORS.items()]
+    rows = [(t, *v, 75.0) for t, v in C.PORTFOLIO_PRIORS.items()]
     pri = spark.createDataFrame(
-        rows, "ticker string, vr_target double, pf_target double, tc_target double, mcap_pct double"
+        rows,
+        "ticker string, vr_target double, pf_target double, tc_target double,"
+        " mcap_pct double, hr_base double",
     )
     scored = (
-        pri.withColumn("hr", hr_score(F.lit(75.0), F.col("pf_target")))
-        .withColumn("adj", talent_risk_adjustment("tc_target"))
-        .withColumn("vr", clamp(F.col("vr_target") * F.col("adj"), 0.0, 100.0))
+        pri.withColumn("hr", hr_score("hr_base", "pf_target"))
+        .withColumn("adj", F.expr(talent_risk_adjustment("tc_target")))
+        .withColumn("vr", F.expr(clamp_sql("vr_target * adj", 0.0, 100.0)))
         .withColumn("syn", formula_synergy("vr", "hr"))
-        .withColumn("composite", composite_score("vr", "hr", "syn"))
+        .withColumn("composite", F.expr(composite_sql("vr", "hr", "syn")))
     )
     got = {r.ticker: r.composite for r in scored.collect()}
     for ticker, (lo, hi) in C.GOLDEN_RANGES.items():
@@ -270,17 +281,21 @@ def test_round_stable_signed_values_match_oracle_formula(spark, duck):
     IDENTICAL formula (mom_revenue_growth growth ratios and the CUSUM
     family feed negatives through it).  Pin the signed behavior on
     both engines so nobody "fixes" one side into asymmetry."""
-    from damg7245_casestudy_03_ai_scoring_engine_spark.functions.core import round_stable
+    from damg7245_casestudy_03_ai_scoring_engine_spark.functions.core import (
+        round_stable,
+        round_stable_sql,
+    )
 
     vals = [-2.5e-7, -1.5e-7, -0.1234565, -0.9999995, -3.25, 0.0,
             2.5e-7, 0.1234565, 3.25, -123.4567894]
     df = spark.createDataFrame([(v,) for v in vals], "x double")
-    got = [
-        r.y
-        for r in df.select(round_stable(F.col("x"), 6).alias("y"))
-        .orderBy("x")
-        .collect()
-    ]
+    both = df.select(
+        "x",
+        round_stable(F.col("x"), 6).alias("y"),
+        F.expr(round_stable_sql("x", 6)).alias("y_sql"),
+    ).orderBy("x").collect()
+    got = [r.y for r in both]
+    assert got == [r.y_sql for r in both]
     sql_vals = ", ".join(f"({v!r})" for v in vals)
     want = [
         r[0]
@@ -295,3 +310,16 @@ def test_round_stable_signed_values_match_oracle_formula(spark, duck):
         round_stable(F.col("x"), 6).alias("y")
     ).collect()[0].y
     assert one == 0.0
+
+
+def test_flit_rejects_non_finite():
+    """Non-finite config values fail when the fragment is BUILT, with a
+    ValueError naming the value — never as a Spark parse error of
+    'nanD'/'infD' far from the bad config."""
+    for bad in (float("nan"), float("inf"), float("-inf")):
+        with pytest.raises(ValueError, match="finite"):
+            flit(bad)
+    with pytest.raises(ValueError, match="finite"):
+        composite_sql("a", "b", "c", alpha=float("nan"))
+    with pytest.raises(ValueError, match="finite"):
+        clamp_sql("x", 0.0, float("inf"))

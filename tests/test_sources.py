@@ -678,23 +678,60 @@ def test_read_parquet_memo_invalidates_on_rewrite(spark, tmp_path):
     assert read_parquet_memo(spark, path) is df2
 
 
-def test_fan_out_gate_on_scan_parallelism(spark, tmp_path, monkeypatch):
-    """r14 (the r13 verdict's top scale risk): `load(..., fan_out=True)`
-    repartitions ONLY when the parquet scan cannot already split to
-    defaultParallelism — single-row-group fixtures keep the fan-out;
-    a multi-file table skips the gratuitous base-table shuffle."""
+def test_read_parquet_memo_prunes_dead_session_entries(spark, tmp_path):
+    """Memo entries of other (stopped) sessions are dropped from ALL
+    three memos on every memo entry point — a session that only calls
+    `read_parquet_memo` (never `load`) must still free them, or dead
+    sessions' frames stay pinned in a long-lived process."""
+    from conftest import SF_SMOKE
+
     from damg7245_casestudy_03_ai_scoring_engine_spark.sources import catalog
 
-    # the real fixture: one file, one row group → the repartition stays
-    fixture = "/root/testdata/sf0.001"
-    df = catalog.load(spark, fixture, "lineitem", fan_out=True)
-    assert "Exchange RoundRobinPartitioning" in df._jdf.queryExecution().toString() or \
-        df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "memo_prune")
+    spark.range(3).write.parquet(path)
+    dead = ("app-of-a-stopped-session", "/gone/table.parquet")
+    try:
+        catalog._DF_MEMO[dead] = (None, None)
+        catalog.read_parquet_memo(spark, path)
+        assert dead not in catalog._DF_MEMO
 
-    # a multi-file layout with >= defaultParallelism splits → no repartition
+        catalog._FAN_OUT_MEMO[dead] = False
+        catalog.load(spark, SF_SMOKE, "nation")
+        assert dead not in catalog._FAN_OUT_MEMO
+    finally:
+        for memo in (catalog._DF_MEMO, catalog._FAN_OUT_MEMO):
+            memo.pop(dead, None)
+
+
+def test_fan_out_gate_on_scan_parallelism(spark, tmp_path):
+    """`load(..., fan_out=True)` repartitions ONLY when the parquet
+    scan cannot already split to defaultParallelism — the
+    single-row-group fixture keeps the round-robin fan-out; a
+    lineitem.parquet directory of >= defaultParallelism files skips
+    the gratuitous base-table shuffle."""
+    from conftest import SF_SMOKE
+
+    from damg7245_casestudy_03_ai_scoring_engine_spark.sources import catalog
+
     par = spark.sparkContext.defaultParallelism
-    many = str(tmp_path / "many_files")
-    spark.range(par * 10).repartition(par).write.parquet(many)
-    assert catalog._scan_fans_out(spark, many) is True
-    # and the single-row-group fixture file does not fan out by itself
-    assert catalog._scan_fans_out(spark, f"{fixture}/lineitem.parquet") is False
+    if par == 1:
+        pytest.skip(
+            "defaultParallelism == 1: one split already meets the fan-out "
+            "threshold, so neither layout repartitions"
+        )
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    single = catalog.load(spark, SF_SMOKE, "lineitem", fan_out=True)
+    assert "RoundRobinPartitioning" in plan(single)
+    assert catalog._scan_fans_out(spark, f"{SF_SMOKE}/lineitem.parquet") is False
+
+    many_sf = tmp_path / "sf_many_files"
+    (
+        spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
+        .repartition(par)
+        .write.parquet(str(many_sf / "lineitem.parquet"))
+    )
+    many = catalog.load(spark, str(many_sf), "lineitem", fan_out=True)
+    assert "RoundRobinPartitioning" not in plan(many)

@@ -1,10 +1,10 @@
 #!/usr/bin/env python
 """Dump `.explain("formatted")` for headline (bench=True) queries to
-plans/r14/<query>_{before,after}.txt — the optimization round's plan
-evidence.  Usage:
+plans/r<ROUND>/<query>_{before,after}.txt — an optimization round's
+plan evidence.  Usage:
 
-    python tools/plan_dump_r14.py before [name ...]
-    python tools/plan_dump_r14.py after  [name ...]
+    python tools/plan_dump.py ROUND before [name ...]
+    python tools/plan_dump.py ROUND after  [name ...]
 
 With no names, dumps every bench-flagged query.  Plans are captured at
 sf0.001 (same scale as PLANS.md) in COLD state (tracked persists
@@ -27,15 +27,15 @@ SF = "/root/testdata/sf0.001"
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    assert suffix in ("before", "after"), suffix
-    names = sys.argv[2:]
+    if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
+        sys.exit(__doc__)
+    rnd, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r14"
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", f"r{rnd}"
     )
     os.makedirs(out_dir, exist_ok=True)
 
-    spark = get_spark("plan-dump-r14", cpus=8, shuffle_partitions=8)
+    spark = get_spark(f"plan-dump-r{rnd}", cpus=8, shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     specs = (
         [(n, REGISTRY[n]) for n in names]
